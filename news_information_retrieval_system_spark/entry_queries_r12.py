@@ -34,6 +34,7 @@ from .entry_queries import (
     _index,
     _qterms,
     _qterms_values_sql,
+    _ranked_out,
 )
 
 MMR_K = 10
@@ -249,7 +250,7 @@ def q_deleted_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVIVING docs only, so a green row proves delete ≡ rebuild —
     including the recomputed df/idf/avgdl statistics."""
     from .index.tombstones import apply_tombstones
-    from .query.bm25 import bm25_topk
+    from .query.bm25 import score_bm25
 
     tomb = (
         _docs(spark, sf_dir)
@@ -257,13 +258,7 @@ def q_deleted_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     idx = apply_tombstones(_index(spark, sf_dir), tomb)
-    out = bm25_topk(idx, _qterms(spark), k=10)
-    return out.select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        _e5(),
-    )
+    return _ranked_out(score_bm25(idx, _qterms(spark), k1=K1, b=B), k=10)
 
 
 ORACLES["deleted_bm25"] = f"""

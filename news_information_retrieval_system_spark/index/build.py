@@ -193,13 +193,25 @@ def build_index(
             "tokens", F.filter("tokens", lambda x: ~x.isin(*sw))
         )
     postings = flat_postings(toks)
+    term_agg, stats, term_stats, doc_stats = derive_stats(postings, docs)
+    src = docs if id_col == "doc_id" else docs.withColumn("doc_id", F.col(id_col))
+    return FulltextIndex(postings, term_stats, doc_stats, stats, src, term_agg)
+
+
+def derive_stats(postings: DataFrame, docs: DataFrame):
+    """The ONE derivation of the index statistics from flat postings
+    (term, doc_id, tf, dl) — the reference's ``finalize()``
+    (incremental_builder.py:456-470) — shared by build, segment hydration
+    and the tombstone mask, so equal postings and docs give bit-equal idf
+    and avgdl. ``docs`` supplies n_docs (token-less docs count toward
+    avgdl). Returns ``(term_agg, stats, term_stats, doc_stats)``."""
     doc_stats = postings.groupBy("doc_id").agg(F.max("dl").alias("dl"))
     term_agg = postings.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("tf").alias("_ttf")
     )
     stats = (
         term_agg.agg(F.sum("_ttf").alias("_total_tokens"))
-        .join(docs.select(F.col(id_col)).agg(F.count("*").alias("n_docs")), how="cross")
+        .join(docs.agg(F.count("*").alias("n_docs")), how="cross")
         .select(
             "n_docs",
             (F.col("_total_tokens") / F.col("n_docs")).alias("avgdl"),
@@ -216,8 +228,7 @@ def build_index(
         )
         .select("term", "df", "idf")
     )
-    src = docs if id_col == "doc_id" else docs.withColumn("doc_id", F.col(id_col))
-    return FulltextIndex(postings, term_stats, doc_stats, stats, src, term_agg)
+    return term_agg, stats, term_stats, doc_stats
 
 
 def build_positional(

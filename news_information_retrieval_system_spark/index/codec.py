@@ -568,3 +568,89 @@ def decode_block_ef(data: bytes, n: int, block_base: int):
 
 
 BLOCK_CODECS["ef"] = (encode_block_ef, decode_block_ef)
+
+
+# ------------------------------------------- batch encode / decode
+# One call per batch of blocks (a whole partition in the segment kernels).
+# varint: one interleaved [gaps | tfs | dls]-per-block stream, so each
+# direction is ONE vectorized varint pass. pfor/ef pick parameters per
+# block, so they loop their (vectorized) block codec over the batch.
+
+
+def _block_layout(n: np.ndarray):
+    """Block id and stream position of each block's gap values, for the
+    interleaved [gaps | tfs | dls] layout of blocks sized ``n``."""
+    starts = np.cumsum(n) - n
+    gid = np.repeat(np.arange(n.size), n)
+    return starts, gid, 2 * starts[gid] + np.arange(gid.size, dtype=np.int64)
+
+
+def encode_blocks(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    n: np.ndarray,
+    base: np.ndarray,
+    codec: str = "varint",
+) -> list:
+    """Encode consecutive blocks (block i owns the next ``n[i]`` ≥ 1
+    postings, doc-sorted, based at ``base[i]``) → one blob per block,
+    byte-identical to ``BLOCK_CODECS[codec][0]`` applied block by block."""
+    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
+    n = np.asarray(n, dtype=np.int64)
+    if codec != "varint":
+        enc_fn = BLOCK_CODECS[codec][0]
+        ends = np.cumsum(n)
+        return [
+            enc_fn(d[e - k:e], tfs[e - k:e], dls[e - k:e], int(b))
+            for e, k, b in zip(ends, n, base)
+        ]
+    starts, gid, pos = _block_layout(n)
+    gaps = np.empty(d.size, dtype=np.uint64)
+    gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)
+    gaps[starts] = (d[starts] - np.asarray(base, dtype=np.int64)).astype(np.uint64)
+    stream = np.empty(3 * d.size, dtype=np.uint64)
+    stream[pos] = gaps
+    stream[pos + n[gid]] = np.asarray(tfs, dtype=np.uint64)
+    stream[pos + 2 * n[gid]] = np.asarray(dls, dtype=np.uint64)
+    enc = varint_encode(stream).tobytes()
+    nbytes = np.add.reduceat(varint_byte_lengths(stream), 3 * starts)
+    ends = np.cumsum(nbytes)
+    return [enc[e - k:e] for e, k in zip(ends, nbytes)]
+
+
+def decode_blocks(data, n: np.ndarray, base: np.ndarray, codec: str = "varint"):
+    """Inverse of ``encode_blocks``: blobs (with their ``n`` and ``base``)
+    → (doc_ids, tfs, dls) int64, the blocks' postings concatenated in
+    input order. varint joins the blobs, decodes them with ONE
+    ``varint_decode``, splits the stream by ``n`` and takes a segmented
+    cumsum for the doc ids. Each block is checked on its own: a blob that
+    does not hold exactly 3·n whole values raises ValueError."""
+    n = np.asarray(n, dtype=np.int64)
+    base = np.asarray(base, dtype=np.int64)
+    if codec != "varint":
+        dec_fn = BLOCK_CODECS[codec][1]
+        parts = [dec_fn(x, int(k), int(b)) for x, k, b in zip(data, n, base)]
+        return tuple(np.concatenate(c) for c in zip(*parts or [[np.empty(0, np.int64)] * 3]))
+    nbytes = np.fromiter(map(len, data), dtype=np.int64, count=n.size)
+    buf = np.frombuffer(b"".join(data), dtype=np.uint8)
+    # values per blob = its terminator bytes; a blob ending mid-value
+    # would run its last value into the next blob
+    is_last = (buf & 0x80) == 0
+    ends = np.cumsum(nbytes)
+    seen = np.concatenate(([0], np.cumsum(is_last)))
+    bad = seen[ends] - seen[ends - nbytes] != 3 * n
+    bad[nbytes > 0] |= ~is_last[ends[nbytes > 0] - 1]
+    if bad.any():
+        raise ValueError(f"corrupt block {int(np.argmax(bad))}: not 3*n whole varints")
+    stream = varint_decode(buf)
+    starts, gid, pos = _block_layout(n)
+    gaps = stream[pos].astype(np.int64)
+    run = np.cumsum(gaps)
+    before = np.concatenate(([0], run))[starts]  # gap total before each block
+    doc_ids = run + np.repeat(base - before, n)
+    return (
+        doc_ids,
+        stream[pos + n[gid]].astype(np.int64),
+        stream[pos + 2 * n[gid]].astype(np.int64),
+    )

@@ -18,8 +18,8 @@ Key design: blocks are keyed by (term, block_key) where
 * blocks stay doc_id-sorted globally (block_key is a prefix of doc_id),
   preserving the reference's sorted-postings invariant (:52-54) which
   powers both delta compression and DAAT merging;
-* segment merge across builds is a groupBy(term, block_key) concat —
-  sorted runs merge by construction;
+* segment merge across builds is a (term, block_key) concat — sorted
+  runs merge by construction;
 * a document's postings for ALL terms share one block_key, so per-group
   BM25 scores are exact — the WAND kernel's per-group top-k is globally
   mergeable without rescoring.
@@ -28,6 +28,7 @@ Key design: blocks are keyed by (term, block_key) where
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from pathlib import Path
 from typing import Iterator
@@ -38,13 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tokenize import tokenizer
-from .codec import (
-    BLOCK_CODECS,
-    decode_block,
-    encode_block,
-    varint_byte_lengths,
-    varint_encode,
-)
+from .build import FulltextIndex, derive_stats, flat_postings
+from .codec import decode_blocks, encode_blocks
 
 DEFAULT_SPAN_BITS = 14  # ≤ 16384 docs per (term, block) group
 
@@ -52,6 +48,51 @@ BLOCK_SCHEMA = (
     "term string, block_key long, n int, min_doc long, max_doc long, "
     "max_tf int, min_dl int, nbytes int, data binary"
 )
+
+
+_KEY = ("tid", "tid2", "block_key")
+_BLOCK_COLS = ("block_key", "n", "min_doc", "max_doc", "max_tf", "min_dl", "nbytes", "data")
+
+
+def _concat(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    pdfs = [p for p in batches if len(p)]
+    if not pdfs:
+        return None
+    return pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+
+
+def _new_group(tid, tid2, bk) -> np.ndarray:
+    """True where a row starts a new (tid, tid2, block_key) run."""
+    new = np.ones(len(tid), dtype=bool)
+    new[1:] = (tid[1:] != tid[:-1]) | (tid2[1:] != tid2[:-1]) | (bk[1:] != bk[:-1])
+    return new
+
+
+def _encode_sorted(
+    tid, tid2, bk, d, tf, dl, span_bits: int, codec: str
+) -> pd.DataFrame:
+    """Postings sorted by (tid, tid2, block_key, doc_id) → one block row
+    per (tid, tid2, block_key) group, all groups encoded in one
+    ``encode_blocks`` call."""
+    n = len(d)
+    starts = np.flatnonzero(_new_group(tid, tid2, bk))
+    ends = np.append(starts[1:], n)
+    sizes = ends - starts
+    data = encode_blocks(d, tf, dl, sizes, bk[starts] << span_bits, codec)
+    return pd.DataFrame(
+        {
+            "tid": tid[starts],
+            "tid2": tid2[starts],
+            "block_key": bk[starts],
+            "n": sizes.astype(np.int32),
+            "min_doc": d[starts],
+            "max_doc": d[ends - 1],
+            "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
+            "min_dl": np.minimum.reduceat(dl, starts).astype(np.int32),
+            "nbytes": np.fromiter(map(len, data), np.int32, len(data)),
+            "data": data,
+        }
+    )
 
 
 def _encode_partition(
@@ -62,72 +103,13 @@ def _encode_partition(
     groups). Rows arrive hash-partitioned by (tid, tid2, block_key) and
     sorted by (tid, tid2, block_key, doc_id); ONLY fixed-width ints cross
     the Arrow boundary (string terms cost ~20s/40M rows in Python object
-    materialization — they're re-attached JVM-side afterwards). The whole
-    partition is varint-encoded in one vectorized pass and sliced into
-    per-group blobs by precomputed byte offsets."""
-    pdfs = [p for p in batches if len(p)]
-    if not pdfs:
-        return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    tid = pdf["tid"].to_numpy(np.int64)
-    tid2 = pdf["tid2"].to_numpy(np.int64)
-    bk = pdf["block_key"].to_numpy(np.int64)
-    d = pdf["doc_id"].to_numpy(np.int64)
-    tf = pdf["tf"].to_numpy(np.int64)
-    dl = pdf["dl"].to_numpy(np.int64)
-    n = len(d)
-    new = np.ones(n, dtype=bool)
-    new[1:] = (tid[1:] != tid[:-1]) | (tid2[1:] != tid2[:-1]) | (bk[1:] != bk[:-1])
-    starts = np.flatnonzero(new)
-    ends = np.append(starts[1:], n)
-    sizes = ends - starts
-    if codec == "varint":
-        gid = np.repeat(np.arange(starts.size), sizes)
-        gaps = np.empty(n, dtype=np.uint64)
-        if n > 1:
-            gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)
-        gaps[starts] = (d[starts] - (bk[starts] << span_bits)).astype(np.uint64)
-        # interleave per group: [gaps | tfs | dls], groups contiguous
-        within = np.arange(n, dtype=np.int64) - starts[gid]
-        pos_g = 3 * starts[gid] + within
-        pos_t = pos_g + sizes[gid]
-        pos_l = pos_t + sizes[gid]
-        stream = np.empty(3 * n, dtype=np.uint64)
-        stream[pos_g] = gaps
-        stream[pos_t] = tf.astype(np.uint64)
-        stream[pos_l] = dl.astype(np.uint64)
-        enc = varint_encode(stream).tobytes()
-        nb = varint_byte_lengths(stream)
-        gbytes = np.add.reduceat(nb, 3 * starts)
-        bends = np.cumsum(gbytes)
-        bstarts = bends - gbytes
-        data = [enc[s:e] for s, e in zip(bstarts, bends)]
-        gbytes = gbytes.astype(np.int32)
-    else:
-        # alternate codecs (e.g. pfor) pick parameters PER GROUP (frame
-        # width b), so the one-pass whole-partition encode doesn't apply;
-        # per-group numpy encodes instead (each group's inner work stays
-        # vectorized).
-        enc_fn = BLOCK_CODECS[codec][0]
-        data = [
-            enc_fn(d[s:e], tf[s:e], dl[s:e], int(bk[s]) << span_bits)
-            for s, e in zip(starts, ends)
-        ]
-        gbytes = np.array([len(x) for x in data], dtype=np.int32)
-    yield pd.DataFrame(
-        {
-            "tid": tid[starts],
-            "tid2": tid2[starts],
-            "block_key": bk[starts],
-            "n": sizes.astype(np.int32),
-            "min_doc": d[starts],
-            "max_doc": d[ends - 1],
-            "max_tf": np.maximum.reduceat(tf, starts).astype(np.int32),
-            "min_dl": np.minimum.reduceat(dl, starts).astype(np.int32),
-            "nbytes": gbytes,
-            "data": data,
-        }
-    )
+    materialization — they're re-attached JVM-side afterwards)."""
+    pdf = _concat(batches)
+    if pdf is not None:
+        cols = (*_KEY, "doc_id", "tf", "dl")
+        yield _encode_sorted(
+            *(pdf[c].to_numpy(np.int64) for c in cols), span_bits, codec
+        )
 
 
 _TID_BLOCK_SCHEMA = (
@@ -143,50 +125,56 @@ def _merge_tid_partition(
     fragments within a partition. Rows arrive hash-partitioned by the key
     triple and sorted by (tid, tid2, block_key, min_doc). Singleton groups
     (the overwhelming majority when the input was doc-range clustered)
-    pass through WITHOUT decoding — pure memcpy; only straddler groups
-    decode → concat (already doc-sorted across fragments) → re-encode,
-    which reproduces the exact bytes a one-shot group encode would emit."""
-    pdfs = [p for p in batches if len(p)]
-    if not pdfs:
+    pass through WITHOUT decoding — pure memcpy; all straddler fragments
+    decode in one ``decode_blocks`` call, sort by (group, doc_id) and
+    re-encode through the partition encoder, which reproduces the exact
+    bytes a one-shot group encode would emit."""
+    pdf = _concat(batches)
+    if pdf is None:
         return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    tid = pdf["tid"].to_numpy(np.int64)
-    tid2 = pdf["tid2"].to_numpy(np.int64)
-    bk = pdf["block_key"].to_numpy(np.int64)
-    n = len(tid)
-    new = np.ones(n, dtype=bool)
-    new[1:] = (tid[1:] != tid[:-1]) | (tid2[1:] != tid2[:-1]) | (bk[1:] != bk[:-1])
-    starts = np.flatnonzero(new)
-    ends = np.append(starts[1:], n)
-    singleton = (ends - starts) == 1
-    out = [pdf.iloc[starts[singleton]]]
-    dup_groups = np.flatnonzero(~singleton)
-    if dup_groups.size:
-        enc_fn, dec_fn = BLOCK_CODECS[codec]
-        data = pdf["data"].to_numpy(object)
-        nrow = pdf["n"].to_numpy(np.int64)
-        rows = []
-        for g in dup_groups:
-            s, e = starts[g], ends[g]
-            base = int(bk[s]) << span_bits
-            ds, tfs, dls = [], [], []
-            for i in range(s, e):
-                d, tf, dl = dec_fn(data[i], int(nrow[i]), base)
-                ds.append(d)
-                tfs.append(tf)
-                dls.append(dl)
-            d = np.concatenate(ds)
-            order = np.argsort(d, kind="mergesort")
-            d = d[order]
-            tf = np.concatenate(tfs)[order]
-            dl = np.concatenate(dls)[order]
-            blob = enc_fn(d, tf, dl, base)
-            rows.append(
-                (int(tid[s]), int(tid2[s]), int(bk[s]), len(d), int(d[0]),
-                 int(d[-1]), int(tf.max()), int(dl.min()), len(blob), blob)
-            )
-        out.append(pd.DataFrame(rows, columns=pdf.columns))
+    tid, tid2, bk = (pdf[c].to_numpy(np.int64) for c in _KEY)
+    group = np.cumsum(_new_group(tid, tid2, bk)) - 1
+    straddler = np.bincount(group)[group] > 1
+    out = [pdf[~straddler]]
+    if straddler.any():
+        frag = pdf[straddler]
+        n = frag["n"].to_numpy(np.int64)
+        d, tf, dl = decode_blocks(
+            frag["data"].to_numpy(object), n, bk[straddler] << span_bits, codec
+        )
+        fgroup = group[straddler]
+        order = np.lexsort((d, np.repeat(fgroup, n)))
+        keys = (np.repeat(k[straddler], n)[order] for k in (tid, tid2, bk))
+        merged = _encode_sorted(*keys, d[order], tf[order], dl[order], span_bits, codec)
+        # any other column (merge_segments' term) rides along from each
+        # group's first fragment
+        first = np.flatnonzero(np.diff(fgroup, prepend=-1))
+        for c in pdf.columns.difference(merged.columns):
+            merged[c] = frag[c].to_numpy()[first]
+        out.append(merged)
     yield pd.concat(out, ignore_index=True)
+
+
+def _term_ids() -> list:
+    """(tid, tid2): the 128-bit term hash the int-only kernels key on."""
+    return [F.xxhash64("term").alias("tid"), F.xxhash64(F.lit(1), F.col("term")).alias("tid2")]
+
+
+def _merge_blocks(
+    seg: DataFrame, parts: int | None, span_bits: int, codec: str,
+    schema: str = _TID_BLOCK_SCHEMA,
+) -> DataFrame:
+    """Block rows keyed by (tid, tid2, block_key), possibly fragmented →
+    one block row per key (``_merge_tid_partition``). ``parts=None``
+    lets adaptive execution size the shuffle."""
+    return (
+        seg.repartition(*([parts] if parts else []), *_KEY)
+        .sortWithinPartitions(*_KEY, "min_doc")
+        .mapInPandas(
+            lambda it: _merge_tid_partition(it, span_bits, codec),
+            schema=schema,
+        )
+    )
 
 
 def build_blocked_postings(
@@ -244,8 +232,7 @@ def build_blocked_postings(
     hash ids degenerate to one-posting blocks.
     """
     blocked = postings.select(
-        F.xxhash64("term").alias("tid"),
-        F.xxhash64(F.lit(1), F.col("term")).alias("tid2"),
+        *_term_ids(),
         F.shiftright(F.col("doc_id"), span_bits).alias("block_key"),
         "doc_id", "tf", "dl",
     )
@@ -273,85 +260,36 @@ def build_blocked_postings(
             else:
                 raw_shuffle = False
     if raw_shuffle:
-        enc = (
-            blocked.repartition(parts, "tid", "tid2", "block_key")
-            .sortWithinPartitions("tid", "tid2", "block_key", "doc_id")
-            .mapInPandas(
-                lambda it: _encode_partition(it, span_bits, codec),
-                schema=_TID_BLOCK_SCHEMA,
-            )
-        )
-    else:
-        seg = blocked.sortWithinPartitions(
-            "tid", "tid2", "block_key", "doc_id"
-        ).mapInPandas(
-            lambda it: _encode_partition(it, span_bits, codec),
-            schema=_TID_BLOCK_SCHEMA,
-        )
-        enc = (
-            seg.repartition(parts, "tid", "tid2", "block_key")
-            .sortWithinPartitions("tid", "tid2", "block_key", "min_doc")
-            .mapInPandas(
-                lambda it: _merge_tid_partition(it, span_bits, codec),
-                schema=_TID_BLOCK_SCHEMA,
-            )
-        )
+        blocked = blocked.repartition(parts, *_KEY)
+    seg = blocked.sortWithinPartitions(*_KEY, "doc_id").mapInPandas(
+        lambda it: _encode_partition(it, span_bits, codec),
+        schema=_TID_BLOCK_SCHEMA,
+    )
+    enc = seg if raw_shuffle else _merge_blocks(seg, parts, span_bits, codec)
     # term-id → term string map for re-attachment after the int-only kernel.
     # Pass the (tiny, already-materialized) term dictionary when you have
     # one — e.g. FulltextIndex.term_stats — otherwise this costs a full
     # distinct() pass over the postings table.
     src = term_dict if term_dict is not None else postings
-    term_map = src.select(
-        "term",
-        F.xxhash64("term").alias("tid"),
-        F.xxhash64(F.lit(1), F.col("term")).alias("tid2"),
-    ).distinct()
-    return enc.join(term_map, ["tid", "tid2"]).select(
-        "term", "block_key", "n", "min_doc", "max_doc",
-        "max_tf", "min_dl", "nbytes", "data",
-    )
+    term_map = src.select("term", *_term_ids()).distinct()
+    return enc.join(term_map, ["tid", "tid2"]).select("term", *_BLOCK_COLS)
 
 
 def merge_segments(
     segments: DataFrame, span_bits: int = DEFAULT_SPAN_BITS, codec: str = "varint"
 ) -> DataFrame:
-    """Shuffle-aware merge of per-segment block tables: same (term,
-    block_key) from different segments decode → concat-sort → re-encode.
-    Disjoint groups pass through untouched (the common case when segments
-    partition the doc-id space)."""
-
-    enc_fn, dec_fn = BLOCK_CODECS[codec]
-
-    def remerge(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (term, bk), g in pdf.groupby(["term", "block_key"], sort=False):
-            base = int(bk) << span_bits
-            if len(g) == 1:
-                out.append(g)
-                continue
-            ds, tfs, dls = [], [], []
-            for _, row in g.iterrows():
-                d, tf, dl = dec_fn(row["data"], row["n"], base)
-                ds.append(d)
-                tfs.append(tf)
-                dls.append(dl)
-            d = np.concatenate(ds)
-            order = np.argsort(d, kind="mergesort")
-            d = d[order]
-            tf = np.concatenate(tfs)[order]
-            dl = np.concatenate(dls)[order]
-            blob = enc_fn(d, tf, dl, base)
-            out.append(
-                pd.DataFrame(
-                    [(term, int(bk), len(d), int(d[0]), int(d[-1]),
-                      int(tf.max()), int(dl.min()), len(blob), blob)],
-                    columns=g.columns,
-                )
-            )
-        return pd.concat(out, ignore_index=True)
-
-    return segments.groupBy("term", "block_key").applyInPandas(
-        remerge, schema=BLOCK_SCHEMA
+    """Shuffle-aware merge of per-segment block tables, through the same
+    kernel as ``build_blocked_postings``' segment merge: (term, block_key)
+    groups present in one segment pass through undecoded (the common case
+    when segments partition the doc-id space); fragments from several
+    segments decode → concat-sort → re-encode. Output rows equal a
+    one-shot ``build_blocked_postings`` over the union, byte for byte.
+    The term string rides through the kernel next to its hash (block
+    rows are few next to postings), so no term-map join follows."""
+    blocks = segments.select("term", *_term_ids(), *_BLOCK_COLS)
+    schema = f"term string, {_TID_BLOCK_SCHEMA}"
+    return _merge_blocks(blocks, None, span_bits, codec, schema).select(
+        "term", *_BLOCK_COLS
     )
 
 
@@ -360,7 +298,7 @@ def index_from_blocks(
     docs: DataFrame,
     span_bits: int = DEFAULT_SPAN_BITS,
     codec: str = "varint",
-):
+) -> FulltextIndex:
     """Hydrate a queryable FulltextIndex from a (possibly merged) block
     table: decode → flat postings, then re-derive df/idf/dl/avgdl — the
     reference's ``finalize()`` (incremental_builder.py:456-470) over
@@ -369,53 +307,29 @@ def index_from_blocks(
     Append ≡ rebuild: an index hydrated from merged segments reproduces
     the flat full-corpus build's rankings exactly (driver entry
     ``incremental_bm25`` checks this against the full-corpus oracle)."""
-    from pyspark.sql import functions as F2
-
-    from .build import FulltextIndex
-
     postings = explode_blocks(blocks, span_bits, codec)
-    term_agg = postings.groupBy("term").agg(
-        F2.count("*").alias("df"), F2.sum("tf").alias("_ttf")
-    )
-    stats = (
-        term_agg.agg(F2.sum("_ttf").alias("_total_tokens"))
-        .join(docs.agg(F2.count("*").alias("n_docs")), how="cross")
-        .select("n_docs", (F2.col("_total_tokens") / F2.col("n_docs")).alias("avgdl"))
-    )
-    term_stats = (
-        term_agg.join(F2.broadcast(stats), how="cross")
-        .withColumn(
-            "idf",
-            F2.log(
-                F2.lit(1.0)
-                + (F2.col("n_docs") - F2.col("df") + 0.5) / (F2.col("df") + 0.5)
-            ),
-        )
-        .select("term", "df", "idf")
-    )
-    doc_stats = postings.groupBy("doc_id").agg(F2.max("dl").alias("dl"))
+    term_agg, stats, term_stats, doc_stats = derive_stats(postings, docs)
     return FulltextIndex(postings, term_stats, doc_stats, stats, docs, term_agg)
 
 
 def explode_blocks(
     blocks: DataFrame, span_bits: int = DEFAULT_SPAN_BITS, codec: str = "varint"
 ) -> DataFrame:
-    """Decode block rows back to flat postings (round-trip / debugging)."""
-    dec_fn = BLOCK_CODECS[codec][1]
+    """Decode block rows back to flat postings (term, doc_id, tf, dl) —
+    the read path of segment hydration (``index_from_blocks``), the
+    masked read (``tombstones.load_masked_index``) and the purge of
+    deleted docs (``tombstones.purge_blocks``). Each Arrow batch of block
+    rows decodes in one ``decode_blocks`` call."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                base = int(row["block_key"]) << span_bits
-                d, tf, dl = dec_fn(row["data"], row["n"], base)
-                outs.append(
-                    pd.DataFrame(
-                        {"term": row["term"], "doc_id": d, "tf": tf, "dl": dl}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if not len(pdf):
+                continue
+            n = pdf["n"].to_numpy(np.int64)
+            base = pdf["block_key"].to_numpy(np.int64) << span_bits
+            d, tf, dl = decode_blocks(pdf["data"].to_numpy(object), n, base, codec)
+            term = np.repeat(pdf["term"].to_numpy(object), n)
+            yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf, "dl": dl})
 
     return blocks.mapInPandas(gen, schema="term string, doc_id long, tf long, dl long")
 
@@ -438,17 +352,11 @@ def build_resumable(
     src/ir/index/incremental_builder.py:508-567, re-expressed as
     partition-level idempotent batch jobs).
 
-    Returns the lineage summary dict.
+    Returns the lineage summary dict over the live segments.
     """
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    lineage_path = out / "lineage.jsonl"
-    done = set()
-    if lineage_path.exists():
-        for line in lineage_path.read_text().splitlines():
-            rec = json.loads(line)
-            if rec.get("status") == "ok":
-                done.add(rec["bucket"])
+    done = {r["bucket"] for r in _read_lineage(out) if r.get("status") == "ok"}
     # Stage the input ONCE, hive-partitioned by bucket: each bucket job then
     # scans only its own partition directory (partition pruning) instead of
     # re-scanning the whole corpus num_buckets times. Idempotent: the staged
@@ -507,48 +415,81 @@ def build_resumable(
         toks = subset.select(
             F.col(id_col).alias("doc_id"), tok(text_col).alias("tokens")
         )
-        from .build import flat_postings
-
         flat = flat_postings(toks)
         blocks = build_blocked_postings(flat, span_bits)
-        seg_path = str(out / "segments" / f"bucket={b}")
-        blocks.write.mode("overwrite").parquet(seg_path)
-        stats = spark.read.parquet(seg_path).agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.sum("nbytes").alias("bytes"),
-            F.min("term").alias("term_min"),
-            F.max("term").alias("term_max"),
-            F.countDistinct("term").alias("n_terms"),
-        ).first()
-        doc_count = subset.count()
-        rec = {
+        seg_path = out / "segments" / f"bucket={b}"
+        blocks.write.mode("overwrite").parquet(str(seg_path))
+        _append_lineage(out, [{
             "bucket": b,
             "status": "ok",
-            "doc_count": doc_count,
-            "n_blocks": stats["n_blocks"],
-            "n_postings": int(stats["n_postings"] or 0),
-            "bytes": int(stats["bytes"] or 0),
-            "term_range": [stats["term_min"], stats["term_max"]],
-            "n_terms": stats["n_terms"],
+            "doc_count": subset.count(),
+            **_segment_stats(spark, seg_path),
             "wall_time_sec": round(time.time() - t0, 3),
-        }
-        with lineage_path.open("a") as f:
-            f.write(json.dumps(rec) + "\n")
-    lines = [json.loads(x) for x in lineage_path.read_text().splitlines()]
+        }])
+    live = _live_segments(_read_lineage(out)).values()
     return {
-        "buckets": len(lines),
-        "docs": sum(r["doc_count"] for r in lines),
-        "postings": sum(r["n_postings"] for r in lines),
-        "bytes": sum(r["bytes"] for r in lines),
-        "lineage": str(lineage_path),
+        "buckets": len(live),
+        "docs": sum(r["doc_count"] for r in live),
+        "postings": sum(r["n_postings"] for r in live),
+        "bytes": sum(r["bytes"] for r in live),
+        "lineage": str(out / "lineage.jsonl"),
     }
 
 
+def _read_lineage(out: Path) -> list[dict]:
+    path = out / "lineage.jsonl"
+    return [json.loads(x) for x in path.read_text().splitlines()] if path.exists() else []
+
+
+def _append_lineage(out: Path, recs: list[dict]) -> None:
+    """Append ``recs`` to the lineage log in ONE write: a compaction's
+    retire and create rows land together or not at all."""
+    with (out / "lineage.jsonl").open("a") as f:
+        f.write("".join(json.dumps(r) + "\n" for r in recs))
+
+
+def _live_segments(rows: list[dict]) -> dict[int, dict]:
+    """bucket id → its 'ok' lineage row, for segments not superseded."""
+    live: dict[int, dict] = {}
+    for r in rows:
+        if r.get("status") == "ok":
+            live[r["bucket"]] = r
+        elif r.get("status") == "superseded":
+            live.pop(r["bucket"], None)
+    return live
+
+
+def _segment_stats(spark: SparkSession, path: Path) -> dict:
+    """Lineage facts of one written segment."""
+    st = spark.read.parquet(str(path)).agg(
+        F.count("*").alias("n_blocks"),
+        F.sum("n").alias("n_postings"),
+        F.sum("nbytes").alias("bytes"),
+        F.min("term").alias("term_min"),
+        F.max("term").alias("term_max"),
+        F.countDistinct("term").alias("n_terms"),
+    ).first()
+    return {
+        "n_blocks": st["n_blocks"],
+        "n_postings": int(st["n_postings"] or 0),
+        "bytes": int(st["bytes"] or 0),
+        "term_range": [st["term_min"], st["term_max"]],
+        "n_terms": st["n_terms"],
+    }
+
+
+def _read_segments(spark: SparkSession, out: Path, buckets) -> DataFrame:
+    return spark.read.parquet(*(str(out / "segments" / f"bucket={b}") for b in sorted(buckets)))
+
+
 def load_merged_blocks(spark: SparkSession, out_dir: str, span_bits: int = DEFAULT_SPAN_BITS) -> DataFrame:
-    """Read all segment parquet and produce the merged block table."""
-    seg = spark.read.parquet(str(Path(out_dir) / "segments"))
-    return merge_segments(seg.drop("bucket"), span_bits)
+    """The merged block table over the segments the lineage log marks
+    live. A directory the log does not commit — an interrupted
+    compaction's output, or an input it retired but has not yet
+    deleted — is never read."""
+    out = Path(out_dir)
+    live = _live_segments(_read_lineage(out))
+    return merge_segments(_read_segments(spark, out, live), span_bits)
 
 
 def plan_compaction(
@@ -567,14 +508,8 @@ def plan_compaction(
     """
     import math
 
-    live: dict[int, dict] = {}
-    for r in lineage_rows:
-        if r.get("status") == "ok":
-            live[r["bucket"]] = r
-        elif r.get("status") == "superseded":
-            live.pop(r["bucket"], None)
     tiers: dict[int, list[int]] = {}
-    for b, r in live.items():
+    for b, r in _live_segments(lineage_rows).items():
         size = max(int(r.get("bytes", 0)), floor_bytes)
         t = int(math.log(size / floor_bytes) / math.log(tier_factor))
         tiers.setdefault(t, []).append(b)
@@ -590,72 +525,54 @@ def compact_segments_dir(
     span_bits: int = DEFAULT_SPAN_BITS,
 ) -> dict:
     """Execute a size-tiered compaction over a ``build_resumable`` output
-    directory: each planned group's segments are union-read, re-merged
-    block-wise (``merge_segments``), written as ONE new segment, and the
-    lineage log is extended append-only — 'superseded' rows retire the
-    inputs, one 'ok' row (with ``merged_from``) records the output.
-    Semantically idempotent: ``load_merged_blocks`` returns the same
-    merged block table before and after (the equality test pins this);
-    what compaction buys is segment COUNT — query-time merge work and
-    per-segment open cost scale with live segments.
+    directory: each planned group's segments are re-merged block-wise
+    (``merge_segments``) into ONE new segment. What compaction buys is
+    segment COUNT — query-time merge work and per-segment open cost scale
+    with live segments; ``load_merged_blocks`` returns the same merged
+    block table before and after.
 
-    Filesystem note: directory swap is local-FS rename/delete here; on a
-    real deployment this step is an Iceberg rewrite-files commit (atomic
-    snapshot swap), same plan shape.
+    Commit order, per group (the lineage log is the commit log):
+
+    1. write the merged segment under its final ``bucket=<id>`` name —
+       not yet in the log, so no reader opens it;
+    2. append the group's 'superseded' rows and the new segment's 'ok'
+       row (with ``merged_from``) in ONE write — the commit;
+    3. delete the input directories.
+
+    A crash before step 2 leaves the old segments live (a retry
+    overwrites the uncommitted output); a crash after it leaves retired
+    inputs that no reader opens, which the next run deletes. Either way
+    ``load_merged_blocks`` returns the same blocks. On a real deployment
+    the same shape is an Iceberg rewrite-files commit.
     """
-    import shutil
-
     out = Path(out_dir)
-    lineage_path = out / "lineage.jsonl"
-    rows = [json.loads(x) for x in lineage_path.read_text().splitlines()]
-    groups = plan_compaction(rows, max_per_tier, tier_factor, floor_bytes)
-    live_ids = {r["bucket"] for r in rows if r.get("status") == "ok"}
-    for r in rows:
-        if r.get("status") == "superseded":
-            live_ids.discard(r["bucket"])
-    next_id = max(live_ids, default=-1) + 1
+    rows = _read_lineage(out)
+    for r in rows:  # finish step 3 of an earlier, interrupted run
+        retired = out / "segments" / f"bucket={r['bucket']}"
+        if r.get("status") == "superseded" and retired.exists():
+            shutil.rmtree(retired)
+    live = _live_segments(rows)
+    next_id = max((r["bucket"] for r in rows), default=-1) + 1
     merged_groups = []
-    for group in groups:
+    for group in plan_compaction(rows, max_per_tier, tier_factor, floor_bytes):
         t0 = time.time()
-        seg = spark.read.parquet(str(out / "segments")).filter(
-            F.col("bucket").isin(group)
-        )
-        merged = merge_segments(seg.drop("bucket"), span_bits)
-        tmp = out / "segments_compact_tmp"
-        merged.write.mode("overwrite").parquet(str(tmp))
-        stats = spark.read.parquet(str(tmp)).agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.sum("nbytes").alias("bytes"),
-            F.min("term").alias("term_min"),
-            F.max("term").alias("term_max"),
-            F.countDistinct("term").alias("n_terms"),
-        ).first()
-        for b in group:
-            shutil.rmtree(out / "segments" / f"bucket={b}")
-        (tmp).rename(out / "segments" / f"bucket={next_id}")
-        doc_count = sum(
-            r["doc_count"] for r in rows
-            if r.get("status") == "ok" and r["bucket"] in group
-        )
-        with lineage_path.open("a") as f:
-            for b in group:
-                f.write(json.dumps(
-                    {"bucket": b, "status": "superseded", "into": next_id}
-                ) + "\n")
-            f.write(json.dumps({
+        seg_path = out / "segments" / f"bucket={next_id}"
+        merged = merge_segments(_read_segments(spark, out, group), span_bits)
+        merged.write.mode("overwrite").parquet(str(seg_path))
+        _append_lineage(out, [
+            *({"bucket": b, "status": "superseded", "into": next_id} for b in group),
+            {
                 "bucket": next_id,
                 "status": "ok",
                 "merged_from": group,
-                "doc_count": doc_count,
-                "n_blocks": stats["n_blocks"],
-                "n_postings": int(stats["n_postings"] or 0),
-                "bytes": int(stats["bytes"] or 0),
-                "term_range": [stats["term_min"], stats["term_max"]],
-                "n_terms": stats["n_terms"],
+                "doc_count": sum(live[b]["doc_count"] for b in group),
+                **_segment_stats(spark, seg_path),
                 "wall_time_sec": round(time.time() - t0, 3),
-            }) + "\n")
+            },
+        ])
+        for b in group:
+            shutil.rmtree(out / "segments" / f"bucket={b}")
         merged_groups.append({"merged_from": group, "into": next_id})
         next_id += 1
-    n_live = len(live_ids) - sum(len(g["merged_from"]) for g in merged_groups) + len(merged_groups)
+    n_live = len(live) - sum(len(g["merged_from"]) - 1 for g in merged_groups)
     return {"groups": merged_groups, "live_segments": n_live}

@@ -33,10 +33,11 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import FulltextIndex
+from .build import FulltextIndex, derive_stats
 from .segments import DEFAULT_SPAN_BITS, build_blocked_postings, explode_blocks
 
 TOMBSTONE_SUBDIR = "tombstones"
@@ -62,13 +63,16 @@ def write_tombstones(
 
 
 def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The deduplicated deletion set (empty frame if none written)."""
+    """The deduplicated deletion set. Only a missing tombstone directory
+    means "no deletes" (an empty frame); any other read error — a
+    corrupt file, a permission error — propagates."""
     try:
-        return spark.read.parquet(
-            f"{out_dir}/{TOMBSTONE_SUBDIR}"
-        ).select("doc_id").distinct()
-    except Exception:
+        t = spark.read.parquet(f"{out_dir}/{TOMBSTONE_SUBDIR}")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], "doc_id long")
+    return t.select("doc_id").distinct()
 
 
 def apply_tombstones(
@@ -84,40 +88,15 @@ def apply_tombstones(
     tests/test_tombstones.py): postings rows are per-doc row-local, so
     ``postings ∖ deleted ≡ rebuild postings``; df/n_docs are integer
     counts over identical rows; avgdl = Σtf/n_docs and the BM25 idf are
-    the same double expressions over those identical integers — so even
-    the floating-point statistics match bit-for-bit.
+    the same double expressions (``build.derive_stats``, shared with the
+    build) over those identical integers — so even the floating-point
+    statistics match bit-for-bit.
     """
     t = tombstones.select("doc_id").distinct()
     tb = F.broadcast(t) if broadcast else t
     postings = index.postings.join(tb, "doc_id", "left_anti")
-    doc_stats = index.doc_stats.join(tb, "doc_id", "left_anti")
     docs = index.docs.join(tb, "doc_id", "left_anti")
-    term_agg = postings.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("_ttf")
-    )
-    stats = (
-        term_agg.agg(F.sum("_ttf").alias("_total_tokens"))
-        .join(
-            docs.select("doc_id").agg(F.count("*").alias("n_docs")),
-            how="cross",
-        )
-        .select(
-            "n_docs",
-            (F.col("_total_tokens") / F.col("n_docs")).alias("avgdl"),
-        )
-    )
-    term_stats = (
-        term_agg.join(F.broadcast(stats), how="cross")
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            ),
-        )
-        .select("term", "df", "idf")
-    )
+    term_agg, stats, term_stats, doc_stats = derive_stats(postings, docs)
     return FulltextIndex(postings, term_stats, doc_stats, stats, docs, term_agg)
 
 

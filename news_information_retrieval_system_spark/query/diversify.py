@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..index.build import FulltextIndex
-from .bm25 import topk
 from .vsm import build_tfidf_weights
 
 
@@ -90,7 +89,17 @@ def mmr_rerank(
     perfect-relevance doc scores λ·1e5).
     """
     one_minus_lam = 1.0 - lam
-    cand = topk(scored, k=pool)
+    # the pool is cut on the shared 9dp rank convention (round(score, 9)
+    # desc, doc_id asc), so ulp-level near-ties at the cut agree across
+    # engines; rel keeps the raw score
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("score", 9)), F.asc("doc_id")
+    )
+    cand = (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= pool)
+        .select("query_id", "rank", "doc_id", "score")
+    )
     rel = cand.withColumn(
         "rel",
         F.col("score") / F.max("score").over(Window.partitionBy("query_id")),

@@ -7,6 +7,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_heap() -> str:
+    """Spark driver heap default: min(16g, 40% of physical RAM). The heap is
+    committed up front (-Xms = -Xmx below), so a fixed 16g on a 15 GB
+    host gets the JVM OOM-killed."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(16 << 10, int(ram * 0.4) >> 20))}m"
+
+
 def get_spark(
     app_name: str = "nirs-spark",
     cores: int | None = None,
@@ -15,6 +23,7 @@ def get_spark(
     """Build a local SparkSession.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+    The JVM heap is $SPARK_DRIVER_MEM or else ``default_heap()``.
     ``shuffle_partitions`` scales with cores so the same job exercises the
     same plan shape at any parallelism level (scaling-efficiency runs).
     """
@@ -27,7 +36,7 @@ def get_spark(
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cores * 4, 16))
         )
-    mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_heap()
     gc_threads = max(2, cores // 2)
     return (
         SparkSession.builder.master(f"local[{cores}]")

@@ -6,9 +6,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from news_information_retrieval_system_spark.index.codec import (
+    BLOCK_CODECS,
     compression_ratio,
     decode_block,
+    decode_blocks,
     encode_block,
+    encode_blocks,
     varint_decode,
     varint_encode,
 )
@@ -155,3 +158,45 @@ def test_compare_compression_reference_example():
     assert stats["gamma"]["compressed_size"] == 5
     # delta bits: [4,4,3,5,7,8,5] → 5+5+4+5+5+8+5 = 37 bits → 5 bytes
     assert stats["delta"]["compressed_size"] == 5
+
+
+def _block_batch(seed=5, n_blocks=40):
+    """Doc-sorted blocks of 1..60 postings in 2^14-doc spans, some based
+    below zero."""
+    rng = np.random.default_rng(seed)
+    n = rng.integers(1, 60, n_blocks)
+    base = rng.integers(-3, 40, n_blocks) << 14
+    d = np.concatenate(
+        [np.sort(rng.choice(1 << 14, k, replace=False)) + b for k, b in zip(n, base)]
+    )
+    return d, rng.integers(1, 300, d.size), rng.integers(1, 5000, d.size), n, base
+
+
+@pytest.mark.parametrize("codec", ["varint", "pfor", "ef"])
+def test_batch_codec_equals_per_block_codec(codec):
+    """encode_blocks/decode_blocks (one call per partition) produce and
+    read exactly the blobs of the per-block codec."""
+    d, tf, dl, n, base = _block_batch()
+    enc_fn = BLOCK_CODECS[codec][0]
+    ends = np.cumsum(n)
+    want = [
+        enc_fn(d[e - k:e], tf[e - k:e], dl[e - k:e], int(b))
+        for e, k, b in zip(ends, n, base)
+    ]
+    blobs = encode_blocks(d, tf, dl, n, base, codec)
+    assert blobs == want
+    for got, exp in zip(decode_blocks(blobs, n, base, codec), (d, tf, dl)):
+        assert got.dtype == np.int64 and (got == exp).all()
+    empty = decode_blocks([], np.array([], np.int64), np.array([], np.int64), codec)
+    assert [x.size for x in empty] == [0, 0, 0]
+
+
+def test_batch_decode_rejects_damaged_blob():
+    """The joined-stream varint decode keeps the per-block check: a blob
+    cut short, or one ending mid-value (which would run into the next
+    blob), raises instead of shifting every later block's postings."""
+    d, tf, dl, n, base = _block_batch()
+    blobs = encode_blocks(d, tf, dl, n, base)
+    for bad in (blobs[7][:-1], blobs[7] + b"\x80"):
+        with pytest.raises(ValueError, match="corrupt block 7"):
+            decode_blocks(blobs[:7] + [bad] + blobs[8:], n, base)

@@ -3,8 +3,12 @@ end-to-end equality check — load_merged_blocks returns the SAME merged
 block table before and after compaction (compaction is semantically
 idempotent; it only reduces live segment count)."""
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
+from news_information_retrieval_system_spark.index import segments
 from news_information_retrieval_system_spark.index.segments import (
     build_resumable,
     compact_segments_dir,
@@ -56,3 +60,61 @@ def test_compaction_preserves_merged_blocks(spark, tmp_path):
     assert before == after
     # idempotent: a second compaction run plans nothing
     assert compact_segments_dir(spark, out, max_per_tier=2)["groups"] == []
+
+
+def _merged(spark, out):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in load_merged_blocks(spark, str(out)).collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text")
+    )
+    out = tmp_path_factory.mktemp("pristine") / "idx"
+    build_resumable(spark, docs, str(out), num_buckets=3)
+    return out, _merged(spark, out)
+
+
+@pytest.mark.parametrize("step", ["write", "commit", "delete"])
+def test_compaction_crash_at_each_step(spark, store, tmp_path, monkeypatch, step):
+    """A compaction that dies at any of its three steps (output written
+    under its final name / lineage commit / input deletion) leaves
+    load_merged_blocks returning the same blocks, payloads included; a
+    rerun then completes it and leaves only live segments on disk."""
+    pristine, before = store
+    out = tmp_path / "idx"
+    shutil.copytree(pristine, out)
+
+    def crash(*_a, **_k):
+        raise RuntimeError(f"crash at {step}")
+
+    if step == "write":  # output fully written, commit not reached
+        monkeypatch.setattr(segments, "_segment_stats", crash)
+    elif step == "commit":
+        monkeypatch.setattr(segments, "_append_lineage", crash)
+    else:  # committed; dies after deleting the first input
+        rmtree, deleted = shutil.rmtree, []
+
+        def rmtree_once(path, *a, **k):
+            if deleted:
+                crash()
+            deleted.append(path)
+            rmtree(path, *a, **k)
+
+        monkeypatch.setattr(segments.shutil, "rmtree", rmtree_once)
+    with pytest.raises(RuntimeError, match=f"crash at {step}"):
+        compact_segments_dir(spark, str(out), max_per_tier=2)
+    monkeypatch.undo()
+    assert _merged(spark, out) == before
+    res = compact_segments_dir(spark, str(out), max_per_tier=2)
+    assert res["live_segments"] == 1
+    assert _merged(spark, out) == before
+    rows = segments._read_lineage(out)
+    live = sorted(f"bucket={b}" for b in segments._live_segments(rows))
+    assert sorted(p.name for p in (out / "segments").iterdir()) == live

@@ -1,3 +1,6 @@
+import gc
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,7 +156,17 @@ def test_no_cached_rdds_leak_after_ops(spark, docs):
     rather than asserting a globally empty store."""
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc.sc()
-    baseline = jsc.getPersistentRDDs().size()
+    # Settle first: RDDs other modules left unreachable are freed by the
+    # ContextCleaner whenever a GC runs, which could otherwise shrink the
+    # store in the middle of the measurement below.
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    baseline, deadline = -1, time.time() + 30
+    while time.time() < deadline:
+        time.sleep(1)
+        n, baseline = baseline, jsc.getPersistentRDDs().size()
+        if n == baseline:
+            break
     for op in (
         lambda: simhash_candidates(docs, hamming=12),
         lambda: minhash_lsh_pairs(docs, k=3, threshold=0.5),

@@ -120,6 +120,22 @@ def test_mmr_pool_smaller_than_k(spark):
     assert sorted(r["mmr_rank"] for r in out) == [1, 2]
 
 
+def test_mmr_pool_cut_on_9dp_grid(spark):
+    # docs 1 and 3 tie on the 9dp grid; the raw double prefers 3 by 1e-12.
+    # The pool is cut on round(score, 9) desc, doc_id asc, so a one-doc
+    # pool holds doc 1, and its rel is its raw score over the pool max.
+    scored = spark.createDataFrame(
+        [("q1", 1, 1.0), ("q1", 2, 0.5), ("q1", 3, 1.0 + 1e-12)],
+        "query_id string, doc_id long, score double",
+    )
+    weights = spark.createDataFrame(
+        [("x", d, 1.0) for d in (1, 2, 3)],
+        "term string, doc_id long, w_norm double",
+    )
+    out = mmr_rerank(scored, weights, k=1, pool=1, lam=0.7).collect()
+    assert [(r["doc_id"], r["score_5dp"]) for r in out] == [(1, 70000)]
+
+
 def test_collapse_keeps_best_and_counts(spark):
     docs = spark.createDataFrame(
         [(1, "aa"), (2, "bb"), (3, "aa"), (4, "cc"), (5, "bb")],
@@ -141,7 +157,7 @@ def test_collapse_keeps_best_and_counts(spark):
     assert out[4]["n_collapsed"] == 1 and out[4]["rank"] == 3
 
 
-@pytest.mark.parametrize("name", ["mmr_topk", "collapsed_topk"])
+@pytest.mark.parametrize("name", ["mmr_topk", "collapsed_topk", "deleted_bm25"])
 def test_entries_match_oracle_sf0001(spark, name):
     con = duckdb.connect()
     con.execute(

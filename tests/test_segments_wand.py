@@ -52,20 +52,42 @@ def test_block_invariants(spark, corpus):
     assert hot["count"] > 1
 
 
-def test_merge_segments_identity(spark, corpus):
-    # split corpus in two halves, build blocks per half, merge → same as
-    # whole-corpus blocks
+BLOCK_COLS = ["term", "block_key", "n", "min_doc", "max_doc", "max_tf",
+              "min_dl", "nbytes", "data"]
+
+
+def _block_rows(df):
+    return sorted(
+        tuple(bytes(r[c]) if c == "data" else r[c] for c in BLOCK_COLS)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("codec", ["varint", "pfor", "ef"])
+def test_merge_segments_identity(spark, corpus, codec):
+    # split the corpus by doc-id hash, so nearly every (term, block_key)
+    # group straddles both segments with interleaved doc ids; the merged
+    # rows, payload bytes included, must equal a one-shot build
     idx = build_index(corpus)
     left = idx.postings.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
     right = idx.postings.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
-    seg = build_blocked_postings(left, SPAN).unionByName(
-        build_blocked_postings(right, SPAN)
+    seg = build_blocked_postings(left, SPAN, codec=codec).unionByName(
+        build_blocked_postings(right, SPAN, codec=codec)
     )
-    merged = merge_segments(seg, SPAN)
-    whole = build_blocked_postings(idx.postings, SPAN)
-    a = set(map(tuple, explode_blocks(merged, SPAN).collect()))
-    b = set(map(tuple, explode_blocks(whole, SPAN).collect()))
-    assert a == b
+    merged = merge_segments(seg, SPAN, codec=codec)
+    whole = build_blocked_postings(idx.postings, SPAN, codec=codec)
+    assert _block_rows(merged) == _block_rows(whole)
+
+
+def test_explode_blocks_ef_roundtrip_with_empty_partition(spark, corpus):
+    idx = build_index(corpus)
+    blocks = build_blocked_postings(idx.postings, SPAN, codec="ef")
+    sc = spark.sparkContext
+    rdd = sc.parallelize(blocks.collect(), 1).union(sc.parallelize([], 1))
+    two = spark.createDataFrame(rdd, blocks.schema)
+    assert two.rdd.getNumPartitions() == 2
+    got = sorted(map(tuple, explode_blocks(two, SPAN, codec="ef").collect()))
+    assert got == sorted(map(tuple, idx.postings.collect()))
 
 
 def test_wand_exact_vs_bm25(spark, corpus):
@@ -231,16 +253,3 @@ def test_pfor_codec_end_to_end(spark, corpus):
         }
         assert got == want
         pblocks.unpersist()
-
-
-def test_pfor_merge_segments_identity(spark, corpus):
-    idx = build_index(corpus)
-    left = idx.postings.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
-    right = idx.postings.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
-    seg = build_blocked_postings(left, SPAN, codec="pfor").unionByName(
-        build_blocked_postings(right, SPAN, codec="pfor")
-    )
-    merged = merge_segments(seg, SPAN, codec="pfor")
-    a = set(map(tuple, explode_blocks(merged, SPAN, codec="pfor").collect()))
-    b = set(map(tuple, idx.postings.collect()))
-    assert a == b

@@ -121,3 +121,15 @@ def test_write_load_roundtrip_appends_and_dedupes(spark, tmp_path):
 def test_load_missing_dir_is_empty(spark, tmp_path):
     empty = load_tombstones(spark, str(tmp_path / "nope"))
     assert empty.count() == 0 and empty.columns == ["doc_id"]
+
+
+def test_load_corrupt_tombstones_raises(spark, tmp_path):
+    """Only a missing directory reads as "no deletes": a damaged
+    tombstone file must fail the read, not hide the deletes."""
+    out = str(tmp_path / "seg")
+    write_tombstones(spark, out, [1, 2])
+    (tmp_path / "seg" / "tombstones" / "part-99999-corrupt.parquet").write_bytes(
+        b"not a parquet file"
+    )
+    with pytest.raises(Exception):
+        load_tombstones(spark, out).count()
