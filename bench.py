@@ -47,7 +47,7 @@ from news_information_retrieval_system_spark.index.segments import build_blocked
 from news_information_retrieval_system_spark.query.bm25 import bm25_topk, query_terms_df  # noqa: E402
 from news_information_retrieval_system_spark.query.bm25_batch import bm25_topk_docpart  # noqa: E402
 from news_information_retrieval_system_spark.query.wand import wand_topk  # noqa: E402
-from news_information_retrieval_system_spark.session import get_spark  # noqa: E402
+from news_information_retrieval_system_spark.session import default_cores, get_spark  # noqa: E402
 
 N_QUERIES = int(os.environ.get("SPARK_GRAFT_QUERIES", "1024"))  # headline batch
 N_SMALL = int(os.environ.get("SPARK_GRAFT_SMALL_QUERIES", str(min(256, N_QUERIES))))
@@ -99,7 +99,7 @@ def ensure_corpus(spark, n_turns: int) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
     n_turns = int(
         os.environ.get("SPARK_GRAFT_TURNS", max(10_000, int(TURNS_PER_SF * sf)))

@@ -119,10 +119,15 @@ def flat_postings(toks: DataFrame, long_doc_threshold: int = 512) -> DataFrame:
       per row, so a 100 TB heterogeneous corpus with 5-50k-token
       documents cannot hit the short path's quadratic O(u·dl) silently
       (the round-2 judge's flagged risk). Identical output rows (order
-      within a doc differs; nothing downstream depends on it).
+      within a doc differs; nothing downstream depends on it). The sort
+      is a projected column that only long rows fill: referenced inside
+      the run-length lambdas, ``array_sort`` would be re-evaluated per
+      element (a 4k-token doc took 84 s that way on 4 cores, 0.3 s sorted
+      once).
 
     Token-less docs vanish at the explode (they carry no postings)."""
     t = F.col("tokens")
+    n = F.size(t)
     pairs_short = F.transform(
         F.array_distinct(t),
         lambda term: F.struct(
@@ -132,8 +137,7 @@ def flat_postings(toks: DataFrame, long_doc_threshold: int = 512) -> DataFrame:
     )
     # sorted-run-length form: 1-based end position of each equal-value run
     # in the sorted array, paired with the previous run's end → tf = diff
-    s = F.array_sort(t)
-    n = F.size(s)
+    s = F.col("sorted")
     ends = F.filter(
         F.sequence(F.lit(1), n),
         lambda i: (i == n) | (F.element_at(s, i) != F.element_at(s, i + 1)),
@@ -150,9 +154,13 @@ def flat_postings(toks: DataFrame, long_doc_threshold: int = 512) -> DataFrame:
         ),
     )
     pairs = F.when(n <= F.lit(long_doc_threshold), pairs_short).otherwise(pairs_long)
-    return toks.select(
-        "doc_id", F.size(t).alias("dl"), F.explode(pairs).alias("p")
-    ).select(F.col("p.term").alias("term"), "doc_id", F.col("p.tf").alias("tf"), "dl")
+    return (
+        toks.select(
+            "doc_id", t, F.when(n > F.lit(long_doc_threshold), F.array_sort(t)).alias("sorted")
+        )
+        .select("doc_id", n.alias("dl"), F.explode(pairs).alias("p"))
+        .select(F.col("p.term").alias("term"), "doc_id", F.col("p.tf").alias("tf"), "dl")
+    )
 
 
 def build_index(

@@ -1,7 +1,7 @@
 """Block-max WAND / document-at-a-time BM25 top-k over compressed blocks.
 
 Reference semantics: WAND with term upper bounds ``UB(t) = score(max_tf,
-min_dl)`` and a top-k heap threshold θ
+min_dl)`` and a top-k threshold θ
 (src/ir/retrieval/query_optimization.py:76-410). Catalyst has no top-k
 early termination (orderBy+limit = TakeOrderedAndProject, full scoring),
 so the skipping lives in a grouped kernel; Spark handles the final k-way
@@ -12,139 +12,98 @@ Physical design (exact, not approximate):
 * blocks are doc-range sharded (segments.py), so ALL postings of a doc —
   for every query term — share one ``block_key``: scores computed within a
   block group are FINAL scores, and per-group top-k is globally mergeable.
-* queries are AGGREGATED PER TERM before touching the blocks
-  (``term → [(query_id, qtf)]``), so each block row is shuffled and
-  decoded exactly ONCE no matter how many queries share the term — a
-  256-query batch sharing stopword terms costs the same decode work as one
-  query.
+* the query batch is collected once and keyed by term code (``term →
+  [(query index, qtf)]``, bm25_batch._query_batch), so each block row is
+  shuffled and decoded at most ONCE no matter how many queries share the
+  term — a 256-query batch sharing stopword terms costs the same decode
+  work as one query.
 * one shuffle: repartition by ``block_key``; the kernel (one Python call
-  per partition) sorts block groups by Σ upper-bound descending, keeps a
-  running per-query top-k heap, and skips a group for query q when the
-  query's UB sum in that group is below its current θ — adaptive
-  partition-local block-max pruning, exact because per-group scores are
-  final and per-partition top-k ∪ merge is exact for any valid θ.
-* final ``row_number() ≤ k`` over (score desc, doc_id asc) merges.
+  per partition) visits block groups by Σ upper bound descending. For each
+  query it keeps every candidate scoring ≥ its k-th best so far; θ(q) is
+  that k-th score, and a group is skipped for q when q's UB sum in the
+  group is below θ(q). A group no query is live in is never decoded.
+  Exact, because per-group scores are final, a skipped doc scores below
+  k kept ones, and per-partition top-k ∪ merge is exact.
+* scoring is the docpart kernel's numpy core (weight, query pairs,
+  bincount, per-query partition); the final merge is ``bm25.topk`` over
+  (score desc, doc_id asc).
 """
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.codec import BLOCK_CODECS, decode_block
+from ..index.codec import decode_blocks
 from ..index.segments import DEFAULT_SPAN_BITS
-
-_NEG_INF = float("-inf")
+from .bm25 import topk
+from .bm25_batch import (
+    CANDIDATES,
+    _bm25_weight,
+    _concat,
+    _query_batch,
+    _Queries,
+    _score_topk,
+    _topk_keep,
+)
 
 
 def _make_kernel(
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    span_bits: int,
-    theta0: dict | None = None,
-    codec: str = "varint",
+    k: int, k1: float, b: float, avgdl: float, span_bits: int, qb: _Queries, codec: str
 ):
-    """theta0: per-query LOWER bound on the global k-th best score (from the
-    seed pass). Any group whose per-query UB sum is below it can be skipped
-    for that query regardless of partition-local heap state — this makes
-    pruning effectiveness independent of partition count (the partition-local
-    heap alone prunes less the more partitions you run, i.e. anti-scaling)."""
-    theta0 = theta0 or {}
-    dec_fn = BLOCK_CODECS[codec][1]
+    n_queries = qb.query_ids.size
+    width = 1 << span_bits
 
     def kernel(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+        pdf = _concat(batches)
+        if pdf is None:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        # group rows by block_key; sort groups by total UB descending so θ
-        # tightens as early as possible
-        order = np.argsort(pdf["block_key"].to_numpy(), kind="mergesort")
-        pdf = pdf.iloc[order].reset_index(drop=True)
+        # rows by (block_key, term code): each group's rows are contiguous,
+        # and every sum below adds its terms in term-code order
+        pdf = pdf.iloc[np.lexsort((pdf["tcode"].to_numpy(), pdf["block_key"].to_numpy()))]
         bk = pdf["block_key"].to_numpy(np.int64)
+        code = pdf["tcode"].to_numpy(np.int64)
+        n = pdf["n"].to_numpy(np.int64)
+        data = pdf["data"].to_numpy(object)
+        idf = qb.idf[code]
+        ub = _bm25_weight(
+            idf, pdf["max_tf"].to_numpy(np.float64), pdf["min_dl"].to_numpy(np.float64),
+            k1, b, avgdl,
+        )
         starts = np.flatnonzero(np.concatenate(([True], bk[1:] != bk[:-1])))
-        ends = np.append(starts[1:], len(bk))
-        ub_base = pdf["ub_base"].to_numpy(np.float64)
-        group_ub = np.add.reduceat(ub_base, starts)
-        group_order = np.argsort(-group_ub, kind="mergesort")
-
-        heaps: dict = {}  # query_id -> [(score, -doc_id)] min-heap of size ≤ k
-
-        rows_data = pdf["data"].to_numpy(object)
-        rows_n = pdf["n"].to_numpy(np.int64)
-        rows_idf = pdf["idf"].to_numpy(np.float64)
-        rows_queries = pdf["queries"].to_numpy(object)
-
-        for g in group_order:
-            s, e = starts[g], ends[g]
-            base = int(bk[s]) << span_bits
-            # per-query UB in this group (qtf-weighted)
-            q_ub: dict = {}
-            for i in range(s, e):
-                for ql in rows_queries[i]:
-                    qid, qtf = ql["query_id"], ql["qtf"]
-                    q_ub[qid] = q_ub.get(qid, 0.0) + qtf * ub_base[i]
-            live = []
-            for qid, ub in q_ub.items():
-                if ub < theta0.get(qid, _NEG_INF):
-                    continue
-                h = heaps.get(qid)
-                if h is None or len(h) < k or ub >= h[0][0]:
-                    live.append(qid)
-            if not live:
+        # (row, query) pairs, row-major: a group's pairs are contiguous too
+        pq, pqtf, prow = qb.pairs(code)
+        pair_start = np.searchsorted(prow, np.append(starts, bk.size))
+        theta = np.full(n_queries, -np.inf)
+        kept_q = np.empty(0, np.int64)
+        kept_d = np.empty(0, np.int64)
+        kept_s = np.empty(0, np.float64)
+        for g in np.argsort(-np.add.reduceat(ub, starts), kind="mergesort"):
+            p = slice(pair_start[g], pair_start[g + 1])
+            q, qtf, row = pq[p], pqtf[p], prow[p]
+            q_ub = np.bincount(q, weights=qtf * ub[row], minlength=n_queries)
+            live = q_ub[q] >= theta[q]
+            if not live.any():
                 continue
-            live_set = set(live)
-            # decode each block row ONCE
-            decoded = []
-            for i in range(s, e):
-                d, tf, dl = dec_fn(rows_data[i], int(rows_n[i]), base)
-                tf = tf.astype(np.float64)
-                contrib = (
-                    rows_idf[i]
-                    * (tf * (k1 + 1.0))
-                    / (tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-                )
-                decoded.append((i, d, contrib))
-            # accumulate per live query
-            per_q: dict = {}
-            for i, d, contrib in decoded:
-                for ql in rows_queries[i]:
-                    qid = ql["query_id"]
-                    if qid not in live_set:
-                        continue
-                    per_q.setdefault(qid, ([], []))
-                    per_q[qid][0].append(d)
-                    per_q[qid][1].append(contrib * ql["qtf"])
-            for qid, (ds, cs) in per_q.items():
-                docs = np.concatenate(ds)
-                contribs = np.concatenate(cs)
-                uniq, inv = np.unique(docs, return_inverse=True)
-                # bincount-with-weights ≈ 5-10x faster than np.add.at
-                scores = np.bincount(inv, weights=contribs, minlength=uniq.size)
-                h = heaps.setdefault(qid, [])
-                for sc, did in zip(scores, uniq):
-                    item = (float(sc), -int(did))
-                    if len(h) < k:
-                        heapq.heappush(h, item)
-                    elif item > h[0]:
-                        heapq.heapreplace(h, item)
-        out_q, out_d, out_s = [], [], []
-        for qid, h in heaps.items():
-            for sc, ndid in h:
-                out_q.append(qid)
-                out_d.append(-ndid)
-                out_s.append(sc)
-        if out_q:
-            yield pd.DataFrame(
-                {"query_id": out_q, "doc_id": np.array(out_d, dtype=np.int64),
-                 "score": np.array(out_s, dtype=np.float64)}
+            q, qtf, row = q[live], qtf[live], row[live]
+            rows, ri = np.unique(row, return_inverse=True)
+            base = int(bk[rows[0]]) << span_bits
+            d, tf, dl = decode_blocks(data[rows], n[rows], np.full(rows.size, base), codec)
+            w = _bm25_weight(np.repeat(idf[rows], n[rows]), tf, dl, k1, b, avgdl)
+            gq, gd, gs = _score_topk(
+                q, qtf, (np.cumsum(n[rows]) - n[rows])[ri], n[rows][ri], d - base, w,
+                width, k, n_queries,
             )
+            all_q = np.concatenate((kept_q, gq))
+            order = np.argsort(all_q, kind="stable")
+            kept_q = all_q[order]
+            kept_d = np.concatenate((kept_d, gd + base))[order]
+            kept_s = np.concatenate((kept_s, gs))[order]
+            keep, theta = _topk_keep(kept_q, kept_s, k, n_queries)
+            kept_q, kept_d, kept_s = kept_q[keep], kept_d[keep], kept_s[keep]
+        if kept_q.size:
+            yield qb.frame(kept_q, kept_d, kept_s)
 
     return kernel
 
@@ -158,128 +117,22 @@ def wand_topk(
     k1: float = 1.2,
     b: float = 0.75,
     span_bits: int = DEFAULT_SPAN_BITS,
-    seed_theta: bool = False,  # two-phase θ seeding (exact either way)
     codec: str = "varint",  # must match the codec the blocks were built with
 ) -> DataFrame:
     """blocks: segments.BLOCK_SCHEMA table. qterms_with_idf: (query_id,
-    term, qtf, idf). → (query_id, rank, doc_id, score), exact BM25 top-k.
+    term, [qtf,] idf). → (query_id, rank, doc_id, score), exact BM25 top-k.
 
-    Default is the ONE-job plan (seed_theta=False): partition-local heap
-    θ only. Measured (interleaved min-of-N on identical cached blocks,
-    256-query batch): no-seed beats the fused seed 1.35s vs 4.61s at
-    200k turns/local[32] AND 18.5s vs 32.3s at 4M turns/pinned
-    local[8] — the seed's extra metadata-aggregate job costs more than
-    its extra pruning saves at every regime tested, because the
-    partition-local heaps already fill within the first few UB-sorted
-    groups. Seeding remains available for the regime it was built for:
-    very many small partitions (heaps stay cold) over very large
-    block tables, where a global lower bound prunes what local heaps
-    cannot.
-
-    Two-phase plan (seed_theta=True):
-      1. ONE metadata job collects the (tiny) per-(query, block_key) UB
-         aggregate; the driver picks each query's best-UB seed group, and
-         a second (tiny) kernel job scores those groups exactly →
-         θ0(q) = q's k-th best seed score, a LOWER bound on the global
-         k-th best.
-      2. live block keys are filtered from the already-collected UB rows
-         on the driver (no extra job) and broadcast-semi-joined so pruned
-         groups never shuffle; the kernel prunes per-query with
-         max(θ0, partition heap θ).
-    Correctness: a group with UB_q < θ0(q) cannot contain a top-k doc for
-    q because ≥k docs scoring ≥ θ0(q) already exist (in q's seed group).
-    Pruning power is thus independent of partition count — the fix for
-    partition-local-θ anti-scaling (more partitions = colder local heaps).
-    """
+    One Spark plan: the query batch is collected (bounded as in
+    ``bm25_topk_docpart``), block rows of its terms are joined with a
+    broadcast term-code table, range-partitioned by ``block_key`` and
+    scored by the pruning kernel; ``bm25.topk`` merges the candidates."""
     spark = blocks.sparkSession
-    if "qtf" not in qterms_with_idf.columns:
-        qterms_with_idf = qterms_with_idf.withColumn("qtf", F.lit(1))
-    qagg = qterms_with_idf.groupBy("term").agg(
-        F.collect_list(F.struct("query_id", "qtf")).alias("queries"),
-        F.first("idf").alias("idf"),
-    )
-    ub_base = (
-        F.col("idf")
-        * (F.col("max_tf") * (k1 + 1.0))
-        / (F.col("max_tf") + k1 * (1.0 - b + b * F.col("min_dl") / avgdl))
-    )
-    qmeta = (
-        blocks.join(F.broadcast(qagg), "term")
-        .withColumn("ub_base", ub_base)
-        .select("block_key", "n", "data", "idf", "queries", "ub_base")
+    qb, codes = _query_batch(qterms_with_idf)
+    rows = blocks.join(F.broadcast(codes), "term").select(
+        "block_key", "tcode", "n", "data", "max_tf", "min_dl"
     )
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    theta0: dict[str, float] = {}
-    if seed_theta:
-        # The per-(query, block_key) UB aggregate is tiny — at most
-        # |Q| × (n_docs >> span_bits) rows (a 4M-doc corpus has ~244 doc
-        # ranges; a 256-query batch → ≤ 63k rows). Collect it ONCE and do
-        # both seed-key selection and, after θ0 is known, live-key
-        # filtering driver-side: one metadata job + one tiny kernel job,
-        # vs the previous three eager jobs (qb materialize/window,
-        # seed collect, live-key collect) and a persist on qb.
-        # Scale bound: the collect is |Q| × doc-ranges-touched rows. At
-        # 10^12 docs (6×10^7 ranges at span_bits=14) a stopword-heavy batch
-        # would overflow the driver — there, raise span_bits for the block
-        # metadata rollup or seed θ0 from a corpus sample; the pruning
-        # below stays correct for ANY valid per-query lower bound.
-        qb_rows = (
-            qmeta.select("block_key", "ub_base", F.explode("queries").alias("q"))
-            .groupBy(F.col("q.query_id").alias("query_id"), F.col("block_key"))
-            .agg(F.sum(F.col("q.qtf") * F.col("ub_base")).alias("ub"))
-        ).collect()
-        best: dict[str, tuple[float, int]] = {}
-        for r in qb_rows:
-            q, u, bk = r["query_id"], float(r["ub"]), int(r["block_key"])
-            cur = best.get(q)
-            # max ub; ties → lowest block_key (matches desc(ub), asc(bk))
-            if cur is None or (u, -bk) > (cur[0], -cur[1]):
-                best[q] = (u, bk)
-        seed_bks = sorted({bk for _, bk in best.values()})
-        if seed_bks:
-            seed_keys = spark.createDataFrame(
-                [(bk,) for bk in seed_bks], "block_key long"
-            )
-            seed_kernel = _make_kernel(k, k1, b, avgdl, span_bits, codec=codec)
-            seed_cand = (
-                qmeta.join(F.broadcast(seed_keys), "block_key")
-                .repartition(min(parts, 8), "block_key")
-                .mapInPandas(
-                    seed_kernel, schema="query_id string, doc_id long, score double"
-                )
-                .collect()  # ≤ partitions × |Q| × k rows
-            )
-            by_q: dict[str, list[float]] = {}
-            for r in seed_cand:
-                by_q.setdefault(r["query_id"], []).append(float(r["score"]))
-            theta0 = {
-                q: sorted(ss, reverse=True)[k - 1]
-                for q, ss in by_q.items()
-                if len(ss) >= k
-            }
-        if theta0:
-            # live keys straight from the already-collected aggregate: a
-            # group survives if ANY query either has no θ0 yet (seed found
-            # < k docs) or reaches its θ0 there
-            live = sorted(
-                {
-                    int(r["block_key"])
-                    for r in qb_rows
-                    if r["query_id"] not in theta0
-                    or float(r["ub"]) >= theta0[r["query_id"]]
-                }
-            )
-            live_keys = spark.createDataFrame(
-                [(bk,) for bk in live], "block_key long"
-            )
-            qmeta = qmeta.join(F.broadcast(live_keys), "block_key")
-    kernel = _make_kernel(k, k1, b, avgdl, span_bits, theta0, codec=codec)
-    candidates = qmeta.repartitionByRange(parts, "block_key").mapInPandas(
-        kernel, schema="query_id string, doc_id long, score double"
+    cand = rows.repartitionByRange(parts, "block_key").mapInPandas(
+        _make_kernel(k, k1, b, avgdl, span_bits, qb, codec), schema=CANDIDATES
     )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return topk(cand, k)

@@ -15,6 +15,12 @@ def default_heap() -> str:
     return f"{max(1024, min(16 << 10, int(ram * 0.4) >> 20))}m"
 
 
+def default_cores() -> int:
+    """Spark local cores default: $SPARK_GRAFT_CPUS (driver contract), else
+    the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "nirs-spark",
     cores: int | None = None,
@@ -22,13 +28,13 @@ def get_spark(
 ) -> SparkSession:
     """Build a local SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+    ``cores`` defaults to ``default_cores()``.
     The JVM heap is $SPARK_DRIVER_MEM or else ``default_heap()``.
     ``shuffle_partitions`` scales with cores so the same job exercises the
     same plan shape at any parallelism level (scaling-efficiency runs).
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         # Data-dependent, NOT cluster-size-dependent (overridable): real
         # clusters size reducers to the data; tying them to core count

@@ -69,26 +69,6 @@ def test_docpart_qtf_weighting(spark, idx_and_queries):
     assert a == b
 
 
-def test_docpart_no_shuffle_mode_identical(spark):
-    """assume_doc_partitioned=True must give identical results for
-    build_index-produced postings (narrow lineage co-locates each doc's
-    postings regardless of input layout)."""
-    from news_information_retrieval_system_spark.index.build import build_index
-    from news_information_retrieval_system_spark.query.bm25_batch import (
-        bm25_topk_docpart,
-    )
-    from news_information_retrieval_system_spark.query.bm25 import query_terms_df
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").repartition(7)
-    idx = build_index(docs).persist()
-    q = query_terms_df(spark, {"q1": "fast table scan", "q2": "slow value window"})
-    a = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-         for r in bm25_topk_docpart(idx, q, k=10).collect()]
-    b = [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-         for r in bm25_topk_docpart(idx, q, k=10, assume_doc_partitioned=True).collect()]
-    assert sorted(a) == sorted(b) and len(a) == 20
-
-
 def test_docpart_closure_bound_fails_fast(spark, mini_docs):
     from news_information_retrieval_system_spark.index.build import build_index
     from news_information_retrieval_system_spark.query.bm25 import query_terms_df

@@ -72,3 +72,33 @@ def test_flat_postings_long_doc_path_identical(spark, mini_docs):
     rows = flat_postings(tokens_df(big)).collect()  # default threshold 512
     assert len(rows) == 50
     assert all(r["tf"] == 100 and r["dl"] == 5000 for r in rows)
+
+
+def test_flat_postings_long_docs_match_counter(spark):
+    """4k- and 40k-token docs take the sorted-run-length branch: rows equal
+    a driver-side Counter, and the 40k doc stays inside a generous bound
+    (with the sort re-evaluated per element a 4k doc took 84 s)."""
+    import random
+    import time
+    from collections import Counter
+
+    from news_information_retrieval_system_spark.index.build import (
+        flat_postings,
+        tokens_df,
+    )
+    from news_information_retrieval_system_spark.tokenize import py_tokenize
+
+    rng = random.Random(5)
+    for n_tok in (4_000, 40_000):
+        text = " ".join(f"w{rng.randrange(3000):04d}" for _ in range(n_tok))
+        doc = spark.createDataFrame([(n_tok, text)], "doc_id long, text string")
+        t0 = time.perf_counter()
+        rows = flat_postings(tokens_df(doc)).collect()
+        elapsed = time.perf_counter() - t0
+        want = Counter(py_tokenize(text))
+        assert sum(want.values()) == n_tok
+        assert sorted((r["term"], r["doc_id"], r["tf"], r["dl"]) for r in rows) == sorted(
+            (t, n_tok, tf, n_tok) for t, tf in want.items()
+        )
+        if n_tok == 40_000:
+            assert elapsed < 15, elapsed

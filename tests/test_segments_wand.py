@@ -1,6 +1,7 @@
 """Blocked index build, segment merge, resumable lineage, WAND exactness."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,17 +98,14 @@ def test_wand_exact_vs_bm25(spark, corpus):
     queries = {"q1": "the query spark", "q2": "data table", "q3": "index search fast"}
     qdf = query_terms_df(spark, queries)
     qidf = qdf.join(idx.term_stats.select("term", "idf"), "term")
-    for seed in (True, False):
-        got = wand_topk(
-            blocks, qidf, n_docs, avgdl, k=10, span_bits=SPAN, seed_theta=seed
-        ).collect()
-        want = bm25_topk(idx, qdf, k=10).collect()
-        gm = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in got}
-        wm = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in want}
-        assert gm.keys() == wm.keys()
-        for key in wm:
-            assert gm[key][0] == wm[key][0], (seed, key, gm[key], wm[key])
-            assert gm[key][1] == pytest.approx(wm[key][1], rel=1e-9)
+    got = wand_topk(blocks, qidf, n_docs, avgdl, k=10, span_bits=SPAN).collect()
+    want = bm25_topk(idx, qdf, k=10).collect()
+    gm = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in got}
+    wm = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in want}
+    assert gm.keys() == wm.keys()
+    for key in wm:
+        assert gm[key][0] == wm[key][0], (key, gm[key], wm[key])
+        assert gm[key][1] == pytest.approx(wm[key][1], rel=1e-9)
 
 
 def test_resumable_build(spark, corpus, tmp_path):
@@ -253,3 +251,83 @@ def test_pfor_codec_end_to_end(spark, corpus):
         }
         assert got == want
         pblocks.unpersist()
+
+
+def _ranked(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in df.collect()
+    )
+
+
+def test_wand_skips_group_below_theta(spark, monkeypatch):
+    """Two doc ranges: the first fills the top-k with scores above the
+    second range's upper bound, so the kernel never decodes the second
+    group, and its rows still equal bm25_topk."""
+    from news_information_retrieval_system_spark.query import wand
+    from news_information_retrieval_system_spark.query.bm25_batch import (
+        _bm25_weight,
+        _query_batch,
+    )
+
+    k = 3
+    texts = [(d, "a a a a a x x x x x") for d in range(10)]  # tf 5, dl 10
+    texts += [(64 + d, "a " + "y " * 99) for d in range(6)]  # tf 1, dl 100
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    idx = build_index(docs)
+    _, avgdl = idx.scalar_stats()
+    qdf = query_terms_df(spark, {"q": "a"})
+    qb, codes = _query_batch(qdf.join(idx.term_stats.select("term", "idf"), "term"))
+    batch = (
+        build_blocked_postings(idx.postings, span_bits=SPAN)
+        .join(codes, "term")
+        .toPandas()
+    )
+    assert sorted(batch["block_key"]) == [0, 1]
+    want = _ranked(bm25_topk(idx, qdf, k=k))
+    ub = _bm25_weight(
+        qb.idf[batch["tcode"].to_numpy()], batch["max_tf"].to_numpy(),
+        batch["min_dl"].to_numpy(), 1.2, 0.75, avgdl,
+    )
+    assert ub[batch["block_key"].to_numpy() == 1].max() < want[-1][3]  # below θ
+
+    decoded = []
+    real = wand.decode_blocks
+
+    def counting(data, n, base, codec):
+        decoded.append(int(base[0]) >> SPAN)
+        return real(data, n, base, codec)
+
+    monkeypatch.setattr(wand, "decode_blocks", counting)
+    kernel = wand._make_kernel(k, 1.2, 0.75, avgdl, SPAN, qb, "varint")
+    cand = pd.concat(list(kernel(iter([batch]))))
+    assert decoded == [0]
+    cand = cand.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
+    got = [("q", i + 1, int(d), round(s, 9))
+           for i, (d, s) in enumerate(zip(cand["doc_id"], cand["score"]))]
+    assert got == want
+
+
+def test_topk_ties_across_groups_and_partitions(spark, corpus):
+    """Duplicate texts in four doc ranges tie at the k-th place: every
+    kernel keeps the lowest doc ids, with the same 9dp scores."""
+    from news_information_retrieval_system_spark.query.bm25_batch import bm25_topk_docpart
+
+    dup = "zzdup spark index query table"
+    dups = [5, 70, 140, 200]
+    docs = corpus.withColumn(
+        "text", F.when(F.col("doc_id").isin(dups), F.lit(dup)).otherwise(F.col("text"))
+    )
+    idx = build_index(docs)
+    n_docs, avgdl = idx.scalar_stats()
+    qdf = query_terms_df(
+        spark, {"q1": "zzdup", "q2": "zzdup spark index", "q3": "zzdup table spark query"}
+    )
+    qidf = qdf.join(idx.term_stats.select("term", "idf"), "term")
+    for k in (2, 3):
+        want = _ranked(bm25_topk(idx, qdf, k=k))
+        assert [r[2] for r in want if r[0] == "q1"] == dups[:k]
+        assert _ranked(bm25_topk_docpart(idx, qdf, k=k)) == want
+        for codec in ("varint", "pfor"):
+            blocks = build_blocked_postings(idx.postings, span_bits=SPAN, codec=codec)
+            got = wand_topk(blocks, qidf, n_docs, avgdl, k=k, span_bits=SPAN, codec=codec)
+            assert _ranked(got) == want, (k, codec)
